@@ -8,15 +8,23 @@ Mapping (SURVEY §2.10 / §7 Phase 4):
   champion label-encode + unseen→-1  → StringIndexer(handleInvalid='keep')
   quantile clip fit-on-train         → approxQuantile + least/greatest
   RobustScaler fit/transform         → pyspark.ml.feature.RobustScaler
-  match-level train_test_split       → split on DISTINCT match ids +
-                                       broadcast semi-join (leak-free by
-                                       construction, like the isin() split)
+  match-level train_test_split       → narrow filter on a seeded hash of
+                                       match_id (leak-free by construction:
+                                       a row's side depends on its match_id
+                                       alone; no shuffle, no broadcast)
+  encoder/clip/scaler fit once       → ONE indexer→assembler→scaler fit on
+                                       the clipped outer train; one
+                                       persisted feature frame feeds every
+                                       validation and final member fit
   5-model ensemble + inverse-MSE wts → N regressors, weight = (1/mse)/Σ —
                                        the 5 scalar weights are the ONLY
                                        driver-side materialization
   per-match prediction rank          → ROW_NUMBER() window (W2 semantics,
-                                       deterministic puuid tie-break)
-  joblib persistence                 → Pipeline/PipelineModel.save()/load()
+                                       deterministic puuid, row_uid
+                                       tie-break)
+  joblib persistence                 → ONE PipelineModel (featurizer stages
+                                       + one regressor per member, each
+                                       writing pred_<name>) save()/load()
 
 Scale: every fitted statistic (quantiles, scaler medians, indexer labels)
 is computed distributed and broadcast back; training data never collects.
@@ -25,7 +33,12 @@ Tree ensembles in Spark ML train distributed; inference is a narrow map.
 
 from __future__ import annotations
 
+import json
+import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
+from operator import add
 
 import numpy as np
 import pandas as pd
@@ -34,7 +47,7 @@ from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.feature import RobustScaler, StringIndexer, VectorAssembler
 from pyspark.ml.regression import GBTRegressor, LinearRegression, RandomForestRegressor
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 SEED = 42
@@ -101,17 +114,26 @@ def silver_with_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_HASH_BUCKETS = 1_000_000
+_VAL = "_val"
+
+
+def in_test_side(test_frac: float, seed: int) -> Column:
+    """True for the rows whose match falls on the test side: a seeded
+    hash of match_id alone, so it never depends on partitioning and a
+    match's rows can never straddle the split."""
+    bucket = F.pmod(F.xxhash64(F.lit(seed), F.col("match_id")), F.lit(_HASH_BUCKETS))
+    return bucket < F.lit(round(test_frac * _HASH_BUCKETS))
+
+
 def match_level_split(
     df: DataFrame, test_frac: float = 0.2, seed: int = SEED
 ) -> tuple[DataFrame, DataFrame]:
-    """Leak-free split on DISTINCT match ids (feature_factory.py:268-287):
-    all 10 rows of a match land on the same side. The id table is tiny →
-    broadcast semi-join, no shuffle of the fact side."""
-    matches = df.select("match_id").distinct()
-    train_ids, test_ids = matches.randomSplit([1 - test_frac, test_frac], seed=seed)
-    train = df.join(F.broadcast(train_ids), "match_id", "left_semi")
-    test = df.join(F.broadcast(test_ids), "match_id", "left_semi")
-    return train, test
+    """Leak-free match-level split (feature_factory.py:268-287): all rows
+    of a match land on the same side. Two narrow filters — no shuffle,
+    no broadcast of the match ids, no driver round trip."""
+    in_test = in_test_side(test_frac, seed)
+    return df.filter(~in_test), df.filter(in_test)
 
 
 def fit_clip_bounds(train: DataFrame, cols: tuple[str, ...] = CLIP_COLS) -> dict[str, tuple[float, float]]:
@@ -129,8 +151,8 @@ def apply_clip(df: DataFrame, bounds: dict[str, tuple[float, float]]) -> DataFra
     return df
 
 
-def build_pipeline(model) -> Pipeline:
-    """indexer → assembler → robust-scaler → regressor (U4/F9)."""
+def build_featurizer() -> Pipeline:
+    """indexer → assembler → robust-scaler (U4/F9)."""
     indexer = StringIndexer(
         inputCol="champion", outputCol="champion_id", handleInvalid="keep"
     )
@@ -143,7 +165,12 @@ def build_pipeline(model) -> Pipeline:
         withCentering=True,
         withScaling=True,
     )
-    return Pipeline(stages=[indexer, assembler, scaler, model])
+    return Pipeline(stages=[indexer, assembler, scaler])
+
+
+def build_pipeline(model) -> Pipeline:
+    """The featurizer followed by one regressor."""
+    return Pipeline(stages=[*build_featurizer().getStages(), model])
 
 
 def default_models() -> dict[str, object]:
@@ -182,51 +209,49 @@ def default_models() -> dict[str, object]:
 
 @dataclass
 class RankingEnsemble:
-    """Fitted ensemble: per-model PipelineModel + inverse-MSE weights
-    (modeling.py:130-142)."""
+    """Fitted ensemble (modeling.py:130-142): one PipelineModel — the
+    featurizer stages, then one regressor per member writing
+    ``pred_<name>`` — plus the inverse-MSE weights and clip bounds."""
 
-    models: dict[str, PipelineModel]
+    pipeline: PipelineModel
     weights: dict[str, float]
     clip_bounds: dict[str, tuple[float, float]] = field(default_factory=dict)
 
+    @property
+    def models(self) -> dict[str, object]:
+        """``{name: fitted regressor}``, named by their prediction column."""
+        return {
+            st.getPredictionCol().removeprefix("pred_"): st
+            for st in self.pipeline.stages
+            if st.hasParam("predictionCol")
+        }
+
     def predict(self, df: DataFrame) -> DataFrame:
         """Weighted-average prediction (F11) + per-match ROW_NUMBER rank
-        (W2, deterministic puuid tie-break — modeling.py:202-212)."""
-        df = apply_clip(df, self.clip_bounds)
-        out = df
-        for name, m in self.models.items():
-            pred = m.transform(out).withColumnRenamed("prediction", f"pred_{name}")
-            drop = [c for c in ("raw_features", "features", "champion_id") if c in pred.columns]
-            out = pred.drop(*drop)
-        expr = None
-        for name, w in self.weights.items():
-            term = F.col(f"pred_{name}") * F.lit(w)
-            expr = term if expr is None else expr + term
-        out = out.withColumn("predicted_score", expr)
+        (W2, deterministic (puuid, row_uid) tie-break — modeling.py:202-212)."""
+        out = self.pipeline.transform(apply_clip(df, self.clip_bounds))
+        out = out.drop("champion_id", "raw_features", "features")
+        score = reduce(
+            add, (F.col(f"pred_{name}") * F.lit(w) for name, w in self.weights.items())
+        )
+        out = out.withColumn("predicted_score", score)
         w_rank = Window.partitionBy("match_id").orderBy(
-            F.desc("predicted_score"), "puuid"
+            F.desc("predicted_score"), "puuid", "row_uid"
         )
         return out.withColumn("predicted_rank", F.row_number().over(w_rank))
 
     def save(self, path: str) -> None:
-        import json
-        import os
-
         os.makedirs(path, exist_ok=True)
-        for name, m in self.models.items():
-            m.write().overwrite().save(f"{path}/{name}")
+        self.pipeline.write().overwrite().save(f"{path}/pipeline")
         with open(f"{path}/meta.json", "w") as f:
             json.dump({"weights": self.weights, "clip_bounds": self.clip_bounds}, f)
 
     @classmethod
     def load(cls, path: str) -> "RankingEnsemble":
-        import json
-
         with open(f"{path}/meta.json") as f:
             meta = json.load(f)
-        models = {name: PipelineModel.load(f"{path}/{name}") for name in meta["weights"]}
         return cls(
-            models=models,
+            pipeline=PipelineModel.load(f"{path}/pipeline"),
             weights=meta["weights"],
             clip_bounds={k: tuple(v) for k, v in meta["clip_bounds"].items()},
         )
@@ -239,62 +264,50 @@ def train_ensemble(
     parallelism: int = 1,
 ) -> RankingEnsemble:
     """Fit each model, weight by inverse validation MSE (modeling.py:94-142).
-    The validation split is match-level, like the outer split.
 
-    ``parallelism > 1`` fits the member models CONCURRENTLY: each fit is
-    an independent chain of Spark jobs, so driver threads submitting them
-    in parallel let the scheduler interleave their stages across executor
-    slots (the same mechanism CrossValidator's own `parallelism` uses —
-    on a 1000-executor cluster one GBT fit rarely saturates the cluster,
-    so sequential member fits leave most slots idle between stages).
-    Results are IDENTICAL to the sequential path: the fits share no
-    state, every estimator is seeded, and the weight normalization is
-    order-independent (asserted in tests/test_ml_extras.py). The split
-    frames are persisted for the duration so concurrent lineages don't
-    re-run the upstream feature pipeline once per model."""
+    As in the reference, the clip bounds and the featurizer are fitted
+    ONCE on the outer train; the scaled frame (features, label, and a
+    match-level validation flag) is persisted and every member's
+    validation fit, MSE and final fit read it.
+
+    ``parallelism`` driver threads submit the member fits concurrently,
+    so their stages interleave across executor slots (the mechanism
+    CrossValidator's own ``parallelism`` uses). Results do not depend on
+    it: the fits share no state, every estimator is seeded, and the
+    weight normalization is order-independent (asserted in
+    tests/test_ml_extras.py)."""
     models = models or default_models()
     clip_bounds = fit_clip_bounds(train)
     train = apply_clip(train, clip_bounds)
-    fit_part, val_part = match_level_split(train, test_frac=val_frac, seed=SEED + 1)
+    featurizer = build_featurizer().fit(train)
+    frame = (
+        featurizer.transform(train.withColumn(_VAL, in_test_side(val_frac, SEED + 1)))
+        .select("features", LABEL, _VAL)
+        .persist()
+    )
+    fit_part, val_part = frame.filter(~F.col(_VAL)), frame.filter(F.col(_VAL))
 
-    def fit_one(item: tuple[str, object]) -> tuple[str, PipelineModel, float]:
+    def fit_one(item: tuple[str, object]) -> tuple[str, object, float]:
         name, reg = item
-        pm = build_pipeline(reg).fit(fit_part)
+        reg = reg.copy({reg.predictionCol: f"pred_{name}"})
         # evaluator per call: Params objects are not thread-safe to share
         mse = RegressionEvaluator(
-            labelCol=LABEL, predictionCol="prediction", metricName="mse"
-        ).evaluate(pm.transform(val_part))
-        return name, pm, mse
+            labelCol=LABEL, predictionCol=f"pred_{name}", metricName="mse"
+        ).evaluate(reg.fit(fit_part).transform(val_part))
+        return name, reg.fit(frame), mse
 
-    def fit_final(item: tuple[str, object]) -> tuple[str, PipelineModel]:
-        name, reg = item
-        return name, build_pipeline(reg).fit(train)
-
-    fitted: dict[str, PipelineModel] = {}
-    inv_mse: dict[str, float] = {}
-    if parallelism > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        for df in (train, fit_part, val_part):
-            df.persist()
-        try:
-            with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                for name, pm, mse in pool.map(fit_one, models.items()):
-                    fitted[name] = pm
-                    inv_mse[name] = 1.0 / max(mse, 1e-10)
-                final = dict(pool.map(fit_final, models.items()))
-        finally:
-            for df in (train, fit_part, val_part):
-                df.unpersist()
-    else:
-        for item in models.items():
-            name, pm, mse = fit_one(item)
-            fitted[name] = pm
-            inv_mse[name] = 1.0 / max(mse, 1e-10)
-        final = dict(fit_final(item) for item in models.items())
+    try:
+        with ThreadPoolExecutor(max_workers=max(1, parallelism)) as pool:
+            fitted = list(pool.map(fit_one, models.items()))
+    finally:
+        frame.unpersist()
+    inv_mse = {name: 1.0 / max(mse, 1e-10) for name, _, mse in fitted}
     total = sum(inv_mse.values())
-    weights = {k: v / total for k, v in inv_mse.items()}
-    return RankingEnsemble(models=final, weights=weights, clip_bounds=clip_bounds)
+    return RankingEnsemble(
+        pipeline=PipelineModel(stages=[*featurizer.stages, *(m for _, m, _ in fitted)]),
+        weights={k: v / total for k, v in inv_mse.items()},
+        clip_bounds=clip_bounds,
+    )
 
 
 def cross_validate_linear(train: DataFrame, n_folds: int = 3):
@@ -323,7 +336,7 @@ def cross_validate_linear(train: DataFrame, n_folds: int = 3):
     return cv.fit(train)
 
 
-def linear_pandas_udf_scorer(lr_pipeline_model: PipelineModel):
+def linear_pandas_udf_scorer(lr_model):
     """U3: vectorized model inference as a Pandas UDF — the pattern for
     models Spark ML can't host (xgb/lgb in the reference,
     modeling.py:145-169). The model parameters are captured in the closure
@@ -331,12 +344,12 @@ def linear_pandas_udf_scorer(lr_pipeline_model: PipelineModel):
     batches, never row-at-a-time Python.
 
     Here the 'external model' is the linear stage's (coefficients,
-    intercept) pulled out of Spark ML — which also gives an exact parity
-    target: the UDF must reproduce PipelineModel.transform bit-for-bit
-    modulo float summation order (asserted in tests)."""
+    intercept) pulled out of a fitted LinearRegressionModel — which also
+    gives an exact parity target: the UDF must reproduce the model's
+    transform bit-for-bit modulo float summation order (asserted in
+    tests)."""
     from pyspark.sql.functions import pandas_udf
 
-    lr_model = lr_pipeline_model.stages[-1]
     coef = np.array(lr_model.coefficients.toArray())
     intercept = float(lr_model.intercept)
 
@@ -355,8 +368,7 @@ def feature_importances(ens: RankingEnsemble) -> "pd.DataFrame":
     matrix is (n_features x n_models) scalars — driver-side by nature."""
     rows: dict[str, dict[str, float]] = {}
     names = ["champion_id", *BASE_FEATURES]
-    for mname, pm in ens.models.items():
-        reg = pm.stages[-1]
+    for mname, reg in ens.models.items():
         if hasattr(reg, "featureImportances"):
             vals = reg.featureImportances.toArray()
         elif hasattr(reg, "coefficients"):

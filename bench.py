@@ -1600,7 +1600,7 @@ def _trim_rerun(block: dict, keep: int, pinned: set[str]) -> None:
     )
     kept = {n: rr[n] for n in rr if n in pinned or n in rest[:keep]}
     if len(kept) < len(rr):
-        block["rerun_shed"] = len(rr) - len(kept)
+        block["rerun_shed"] = block.get("rerun_shed", 0) + (len(rr) - len(kept))
         block["rerun"] = kept
 
 

@@ -520,6 +520,24 @@ def test_rerun_trim_pins_baselines_and_marks_shed():
         assert set(st["rerun"]) == {"q_tier_5", "q_tier_4", "q_tier_3"}
 
 
+def test_rerun_trim_twice_accumulates_shed_count():
+    """Trimming the same block twice (the ladder's later rungs re-trim a
+    block an earlier rung already trimmed) must add to ``rerun_shed``,
+    not overwrite it with the second trim's count alone."""
+    from bench import _trim_rerun
+
+    block = {"rerun": {f"q_{i}": [10.0 + i, 1.0] for i in range(6)}}
+    _trim_rerun(block, keep=3, pinned=set())
+    assert block["rerun_shed"] == 3
+    assert set(block["rerun"]) == {"q_5", "q_4", "q_3"}
+    _trim_rerun(block, keep=1, pinned=set())
+    assert block["rerun_shed"] == 5
+    assert set(block["rerun"]) == {"q_5"}
+    # a no-op trim leaves the count alone
+    _trim_rerun(block, keep=1, pinned=set())
+    assert block["rerun_shed"] == 5
+
+
 def test_worst_offenders_soft_trigger():
     """r14 (VERDICT r13 item 6): the N worst sub-threshold offenders vs
     the trailing band get the fresh-session arm too — capped at N, hard

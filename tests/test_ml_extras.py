@@ -81,7 +81,7 @@ def test_pandas_udf_inference_matches_spark_ml(spark, silver):
     # pandas_udf needs a plain array column, not the ML VectorUDT
     from pyspark.ml.functions import vector_to_array
 
-    udf = linear_pandas_udf_scorer(pm)
+    udf = linear_pandas_udf_scorer(pm.stages[-1])
     scored_udf = scored_ml.withColumn(
         "prediction_udf", udf(vector_to_array("features"))
     )
