@@ -13,18 +13,25 @@ Mapping (SURVEY §2.10 / §7 Phase 4):
                                        a row's side depends on its match_id
                                        alone; no shuffle, no broadcast)
   encoder/clip/scaler fit once       → ONE indexer→assembler→scaler fit on
-                                       the clipped outer train; one
-                                       persisted feature frame feeds every
-                                       validation and final member fit
+                                       the clipped outer train, kept as its
+                                       statistics (Featurizer: labels,
+                                       medians, ranges) and applied as
+                                       column expressions; one persisted
+                                       feature frame feeds every validation
+                                       and final member fit
   5-model ensemble + inverse-MSE wts → N regressors, weight = (1/mse)/Σ —
                                        the 5 scalar weights are the ONLY
                                        driver-side materialization
   per-match prediction rank          → ROW_NUMBER() window (W2 semantics,
                                        deterministic puuid, row_uid
                                        tie-break)
-  joblib persistence                 → ONE PipelineModel (featurizer stages
-                                       + one regressor per member, each
-                                       writing pred_<name>) save()/load()
+  joblib persistence                 → preprocessors apart from models, as
+                                       in feature_factory.py:316-339: the
+                                       featurizer statistics, clip bounds
+                                       and weights in meta.json; ONE
+                                       PipelineModel of the member
+                                       regressors (each writing
+                                       pred_<name>) save()/load()
 
 Scale: every fitted statistic (quantiles, scaler medians, indexer labels)
 is computed distributed and broadcast back; training data never collects.
@@ -34,9 +41,8 @@ Tree ensembles in Spark ML train distributed; inference is a narrow map.
 from __future__ import annotations
 
 import json
-import os
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from functools import reduce
 from operator import add
 
@@ -45,7 +51,8 @@ import pandas as pd
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.evaluation import RegressionEvaluator
-from pyspark.ml.feature import RobustScaler, StringIndexer, VectorAssembler
+from pyspark.ml.feature import RobustScaler, StringIndexer, StringIndexerModel, VectorAssembler
+from pyspark.ml.functions import array_to_vector
 from pyspark.ml.regression import GBTRegressor, LinearRegression, RandomForestRegressor
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -78,6 +85,8 @@ BASE_FEATURES = [
     "team_contribution",
     "combat_efficiency",
 ]
+# the order of the entries of every ``features`` vector
+FEATURES = ["champion_id", *BASE_FEATURES]
 CLIP_COLS = ("kda", "damage_per_min", "gold_per_min")  # feature_factory.py:230
 
 
@@ -156,9 +165,7 @@ def build_featurizer() -> Pipeline:
     indexer = StringIndexer(
         inputCol="champion", outputCol="champion_id", handleInvalid="keep"
     )
-    assembler = VectorAssembler(
-        inputCols=["champion_id", *BASE_FEATURES], outputCol="raw_features"
-    )
+    assembler = VectorAssembler(inputCols=FEATURES, outputCol="raw_features")
     scaler = RobustScaler(
         inputCol="raw_features",
         outputCol="features",
@@ -207,30 +214,104 @@ def default_models() -> dict[str, object]:
     }
 
 
+@dataclass(frozen=True)
+class Featurizer:
+    """The fitted indexer→assembler→robust-scaler as its statistics: the
+    champion labels in index order, and each feature's median and
+    quantile range in ``FEATURES`` order."""
+
+    labels: list[str]
+    median: list[float]
+    quantile_range: list[float]
+
+    @classmethod
+    def fit(cls, train: DataFrame) -> "Featurizer":
+        """Fits ``build_featurizer()`` on ``train`` and keeps its statistics."""
+        indexer, _, scaler = build_featurizer().fit(train).stages
+        return cls(
+            labels=list(indexer.labels),
+            median=scaler.median.toArray().tolist(),
+            quantile_range=scaler.range.toArray().tolist(),
+        )
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        """Adds ``features``: RobustScalerModel's own formula,
+        ``(x - median) * (0 if range == 0 else 1 / range)``, as column
+        expressions. ``array_to_vector`` always builds a dense vector, as
+        RobustScalerModel does; VectorAssembler would store a row with
+        many zeros as a sparse vector, whose dot product with a linear
+        model's coefficients sums in another order. The column carries
+        RobustScalerModel's vector-size metadata, without which every
+        regressor fit runs a job to count the features."""
+        indexer = StringIndexerModel.from_labels(
+            self.labels, "champion", "champion_id", handleInvalid="keep"
+        )
+        # ``int_col - median`` widens int/bigint to double with the same
+        # Cast VectorAssembler applies
+        scaled = [
+            (F.col(c) - m) * (0.0 if r == 0 else 1.0 / r)
+            for c, m, r in zip(FEATURES, self.median, self.quantile_range)
+        ]
+        return (
+            indexer.transform(df)
+            .withColumn(
+                "features",
+                array_to_vector(F.array(*scaled)).alias(
+                    "features", metadata={"ml_attr": {"num_attrs": len(FEATURES)}}
+                ),
+            )
+            .drop("champion_id")
+        )
+
+
+def _hadoop_file(path: str):
+    """The JVM, ``path`` as a Hadoop Path and its FileSystem, so meta.json
+    goes where Spark ML writes ``pipeline/`` for any URI (file://,
+    hdfs://, s3a://). Reading and writing through it runs no Spark job."""
+    sc = SparkSession.active().sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return sc._jvm, p, p.getFileSystem(sc._jsc.hadoopConfiguration())
+
+
+def _write_text(path: str, text: str) -> None:
+    _, p, fs = _hadoop_file(path)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _read_text(path: str) -> str:
+    jvm, p, fs = _hadoop_file(path)
+    stream = fs.open(p)
+    try:
+        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
 @dataclass
 class RankingEnsemble:
-    """Fitted ensemble (modeling.py:130-142): one PipelineModel — the
-    featurizer stages, then one regressor per member writing
-    ``pred_<name>`` — plus the inverse-MSE weights and clip bounds."""
+    """Fitted ensemble (modeling.py:130-142): the featurizer statistics,
+    one PipelineModel of the member regressors (each writing
+    ``pred_<name>``), the inverse-MSE weights and the clip bounds."""
 
     pipeline: PipelineModel
     weights: dict[str, float]
+    featurizer: Featurizer
     clip_bounds: dict[str, tuple[float, float]] = field(default_factory=dict)
 
     @property
     def models(self) -> dict[str, object]:
         """``{name: fitted regressor}``, named by their prediction column."""
-        return {
-            st.getPredictionCol().removeprefix("pred_"): st
-            for st in self.pipeline.stages
-            if st.hasParam("predictionCol")
-        }
+        return {st.getPredictionCol().removeprefix("pred_"): st for st in self.pipeline.stages}
 
     def predict(self, df: DataFrame) -> DataFrame:
         """Weighted-average prediction (F11) + per-match ROW_NUMBER rank
         (W2, deterministic (puuid, row_uid) tie-break — modeling.py:202-212)."""
-        out = self.pipeline.transform(apply_clip(df, self.clip_bounds))
-        out = out.drop("champion_id", "raw_features", "features")
+        features = self.featurizer.transform(apply_clip(df, self.clip_bounds))
+        out = self.pipeline.transform(features).drop("features")
         score = reduce(
             add, (F.col(f"pred_{name}") * F.lit(w) for name, w in self.weights.items())
         )
@@ -241,18 +322,24 @@ class RankingEnsemble:
         return out.withColumn("predicted_rank", F.row_number().over(w_rank))
 
     def save(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
+        """Writes ``pipeline/`` and ``meta.json`` under ``path`` (a local
+        path or any Hadoop FileSystem URI). JSON round-trips doubles
+        exactly."""
         self.pipeline.write().overwrite().save(f"{path}/pipeline")
-        with open(f"{path}/meta.json", "w") as f:
-            json.dump({"weights": self.weights, "clip_bounds": self.clip_bounds}, f)
+        meta = {
+            "weights": self.weights,
+            "clip_bounds": self.clip_bounds,
+            "featurizer": asdict(self.featurizer),
+        }
+        _write_text(f"{path}/meta.json", json.dumps(meta))
 
     @classmethod
     def load(cls, path: str) -> "RankingEnsemble":
-        with open(f"{path}/meta.json") as f:
-            meta = json.load(f)
+        meta = json.loads(_read_text(f"{path}/meta.json"))
         return cls(
             pipeline=PipelineModel.load(f"{path}/pipeline"),
             weights=meta["weights"],
+            featurizer=Featurizer(**meta["featurizer"]),
             clip_bounds={k: tuple(v) for k, v in meta["clip_bounds"].items()},
         )
 
@@ -279,7 +366,7 @@ def train_ensemble(
     models = models or default_models()
     clip_bounds = fit_clip_bounds(train)
     train = apply_clip(train, clip_bounds)
-    featurizer = build_featurizer().fit(train)
+    featurizer = Featurizer.fit(train)
     frame = (
         featurizer.transform(train.withColumn(_VAL, in_test_side(val_frac, SEED + 1)))
         .select("features", LABEL, _VAL)
@@ -304,8 +391,9 @@ def train_ensemble(
     inv_mse = {name: 1.0 / max(mse, 1e-10) for name, _, mse in fitted}
     total = sum(inv_mse.values())
     return RankingEnsemble(
-        pipeline=PipelineModel(stages=[*featurizer.stages, *(m for _, m, _ in fitted)]),
+        pipeline=PipelineModel(stages=[m for _, m, _ in fitted]),
         weights={k: v / total for k, v in inv_mse.items()},
+        featurizer=featurizer,
         clip_bounds=clip_bounds,
     )
 
@@ -367,7 +455,6 @@ def feature_importances(ens: RankingEnsemble) -> "pd.DataFrame":
     featureImportances; the linear stage contributes |coefficient|. The
     matrix is (n_features x n_models) scalars — driver-side by nature."""
     rows: dict[str, dict[str, float]] = {}
-    names = ["champion_id", *BASE_FEATURES]
     for mname, reg in ens.models.items():
         if hasattr(reg, "featureImportances"):
             vals = reg.featureImportances.toArray()
@@ -378,7 +465,7 @@ def feature_importances(ens: RankingEnsemble) -> "pd.DataFrame":
             # feature's factor row (its total pairwise-interaction weight)
             factors = reg.factors.toArray()
             vals = np.abs(reg.linear.toArray()) + (factors**2).sum(axis=1)
-        for f, v in zip(names, vals):
+        for f, v in zip(FEATURES, vals):
             rows.setdefault(f, {})[mname] = float(v)
     out = pd.DataFrame(
         [{"feature": f, **per_model} for f, per_model in rows.items()]

@@ -4,6 +4,8 @@ parity, leak-free split)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -104,11 +106,51 @@ def _lr():
     return LinearRegression(labelCol=LABEL, featuresCol="features", regParam=0.01)
 
 
+def test_featurizer_matches_spark_ml_reference(silver):
+    """Featurizer applies the fitted indexer→assembler→robust-scaler as
+    column expressions: on the clipped train split plus one row with an
+    unseen champion (the handleInvalid="keep" index), its dense
+    ``features`` equal the Spark ML pipeline's element for element,
+    including the zero-range column's, and carry the same metadata."""
+    import numpy as np
+    from pyspark.ml.linalg import DenseVector
+
+    from aram_matchdata_etl_spark.ml.ranking import (
+        Featurizer,
+        apply_clip,
+        build_featurizer,
+        fit_clip_bounds,
+        match_level_split,
+    )
+
+    train, _ = match_level_split(silver)
+    train = apply_clip(train, fit_clip_bounds(train))
+    unseen = train.limit(1).withColumn("champion", F.lit("no-such-champion"))
+    df = train.unionByName(unseen).cache()
+    ours = Featurizer.fit(train)
+    assert "no-such-champion" not in ours.labels
+    assert 0.0 in ours.quantile_range
+
+    def features(fitted):
+        out = fitted.transform(df)
+        rows = out.select("row_uid", "champion", "features").collect()
+        return out.schema["features"].metadata, {(r.row_uid, r.champion): r.features for r in rows}
+
+    (meta_a, a), (meta_b, b) = features(ours), features(build_featurizer().fit(train))
+    df.unpersist()
+    assert meta_a == meta_b
+    assert a.keys() == b.keys() and len(a) == train.count() + 1
+    assert all(isinstance(v, DenseVector) for v in (*a.values(), *b.values()))
+    keys = sorted(a)
+    diff = np.abs(np.stack([a[k].toArray() for k in keys]) - np.stack([b[k].toArray() for k in keys]))
+    assert diff.max() == 0.0
+
+
 def test_featurizer_fits_once_into_one_pipeline(spark, silver):
     """train_ensemble fits the scaler once for all members and all phases
     (one ``collect at RobustScaler.scala`` job), and the fitted ensemble
-    is one PipelineModel: the 3 featurizer stages, then one regressor per
-    member."""
+    is one PipelineModel of one regressor per member: the featurizer is
+    kept as statistics, not as stages."""
     from pyspark.ml.regression import DecisionTreeRegressor
 
     from aram_matchdata_etl_spark.ml.ranking import LABEL, SEED, match_level_split, train_ensemble
@@ -131,25 +173,35 @@ def test_featurizer_fits_once_into_one_pipeline(spark, silver):
         if jid not in before and name.startswith("collect at RobustScaler.scala")
     ]
     assert len(scaler_fits) == 1, scaler_fits
-    assert len(ens.pipeline.stages) == 3 + 2
+    assert len(ens.pipeline.stages) == 2
     assert {k: type(m).__name__ for k, m in ens.models.items()} == {
         "lr": "LinearRegressionModel",
         "dt": "DecisionTreeRegressionModel",
     }
 
 
-def test_lr_ensemble_save_load_parity(spark, tmp_path, silver):
-    """S13 in the fast tier: the on-disk layout (one pipeline/ directory
-    plus meta.json) reproduces every prediction exactly."""
-    from aram_matchdata_etl_spark.ml.ranking import RankingEnsemble, match_level_split, train_ensemble
+@pytest.fixture(scope="module")
+def lr_ensemble(silver):
+    from aram_matchdata_etl_spark.ml.ranking import match_level_split, train_ensemble
 
     train, test = match_level_split(silver)
-    ens = train_ensemble(train, models={"lr": _lr()})
+    return train_ensemble(train, models={"lr": _lr()}), test
+
+
+def test_lr_ensemble_save_load_parity(tmp_path, lr_ensemble):
+    """S13 in the fast tier: the on-disk layout (one pipeline/ directory
+    of the member regressors plus meta.json) reproduces every prediction
+    exactly."""
+    from aram_matchdata_etl_spark.ml.ranking import RankingEnsemble
+
+    ens, test = lr_ensemble
     path = str(tmp_path / "ensemble")
     ens.save(path)
     loaded = RankingEnsemble.load(path)
     assert loaded.weights == ens.weights == {"lr": 1.0}
     assert loaded.clip_bounds == ens.clip_bounds
+    assert loaded.featurizer == ens.featurizer
+    assert len(os.listdir(f"{path}/pipeline/stages")) == len(ens.models) == 1
     a = ens.predict(test).select("row_uid", "predicted_score", "predicted_rank")
     b = loaded.predict(test).select(
         "row_uid",
@@ -167,6 +219,27 @@ def test_lr_ensemble_save_load_parity(spark, tmp_path, silver):
     )
     assert row.n == test.count() > 0
     assert row.d == 0.0 and row.moved == 0
+
+
+def test_save_load_through_file_uri(tmp_path, lr_ensemble):
+    """save/load go through the path's Hadoop FileSystem: for a file://
+    URI, meta.json lands inside the model directory next to pipeline/,
+    and the ensemble loads back whole."""
+    from aram_matchdata_etl_spark.ml.ranking import RankingEnsemble
+
+    ens, _ = lr_ensemble
+    model_dir = tmp_path / "ensemble"
+    ens.save(model_dir.as_uri())
+    assert sorted(p.name for p in model_dir.iterdir() if not p.name.startswith(".")) == [
+        "meta.json",
+        "pipeline",
+    ]
+    loaded = RankingEnsemble.load(model_dir.as_uri())
+    assert loaded.weights == ens.weights
+    assert loaded.clip_bounds == ens.clip_bounds
+    assert loaded.featurizer == ens.featurizer
+    assert loaded.models["lr"].coefficients == ens.models["lr"].coefficients
+    assert loaded.models["lr"].intercept == ens.models["lr"].intercept
 
 
 @pytest.mark.slow
